@@ -3,14 +3,31 @@
 North-rule requirement: "resumable from checkpoint with per-partition
 lineage + metrics". Each pipeline stage writes:
 
-  out_dir/<stage>/                      partitioned parquet
-  out_dir/<stage>/_lineage.json         stage manifest: config fingerprint,
-                                        input fingerprint, row count,
-                                        per-partition row counters
+  out_dir/<stage>/                  parquet (partitioned stages nest their
+                                    files under <col>=<value>/ directories)
+  out_dir/<stage>._lineage.json     stage manifest
 
-A stage re-runs only when its fingerprint (config + upstream fingerprint)
-changes; otherwise the parquet is reused as-is (exact resume — contents are
-deterministic given the fingerprint).
+Manifest fields:
+
+  fingerprint  hash of the stage config and its upstream fingerprint
+  rows         rows written, counted by an Observation on the write job
+               and checked against the sum of the file footers; a mismatch
+               raises instead of writing the manifest
+  partitions   one entry per output parquet file: {"file": path relative
+               to the stage directory, "rows": the footer's row count}
+  schema       the written schema as Spark JSON: every field nullable,
+               partition columns last (what Spark infers when reading the
+               files); the stage is read back with it
+  written_at   unix time of the commit
+
+A stage commits in its write job alone: the row counts come from the
+Observation and the footers (read on the driver through pyarrow, no Spark
+job), and every later read uses the manifest schema, so no
+schema-inference job runs either. A stage re-runs only when its
+fingerprint (config + upstream fingerprint) changes; otherwise the parquet
+is reused as-is (exact resume — contents are deterministic given the
+fingerprint). Resume reads only `fingerprint` and `schema`, so manifests
+whose `partitions` hold per-`spark_partition_id` counts still resume.
 """
 
 from __future__ import annotations
@@ -19,8 +36,12 @@ import hashlib
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 
 def _fingerprint(obj) -> str:
@@ -43,6 +64,54 @@ def read_manifest(out_dir: str, stage: str):
     return None
 
 
+def _nullable(t):
+    """A Spark JSON data type with every struct field, array element and map
+    value nullable, as parquet stores them."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [{**f, "type": _nullable(f["type"]), "nullable": True}
+                                for f in t["fields"]]}
+    if t["type"] == "array":
+        return {**t, "elementType": _nullable(t["elementType"]), "containsNull": True}
+    if t["type"] == "map":
+        return {**t, "keyType": _nullable(t["keyType"]), "valueType": _nullable(t["valueType"]),
+                "valueContainsNull": True}
+    return t
+
+
+def _written_schema(df: DataFrame, partition_by) -> dict:
+    """The schema a read of the written files infers: all fields nullable,
+    partition columns moved last."""
+    partition_by = list(partition_by or ())
+    fields = _nullable(df.schema.jsonValue())["fields"]
+    part = [f for c in partition_by for f in fields if f["name"] == c]
+    rest = [f for f in fields if f["name"] not in partition_by]
+    return {"type": "struct", "fields": rest + part}
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for paths a parquet read skips (_SUCCESS, .crc files)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _file_rows(path: str) -> list:
+    """[{"file", "rows"}] for every data file under a stage directory, from
+    the parquet footers, read on the driver."""
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    fs, root = pafs.FileSystem.from_uri(path if urlparse(path).scheme else os.path.abspath(path))
+    files = []
+    for info in fs.get_file_info(pafs.FileSelector(root, recursive=True)):
+        rel = info.path[len(root):].lstrip("/")
+        if info.type != pafs.FileType.File or any(map(_hidden, rel.split("/"))):
+            continue
+        with fs.open_input_file(info.path) as f:
+            files.append({"file": rel, "rows": pq.read_metadata(f).num_rows})
+    return sorted(files, key=lambda e: e["file"])
+
+
 def write_stage(
     df: DataFrame,
     out_dir: str,
@@ -50,27 +119,31 @@ def write_stage(
     fingerprint: str,
     partition_by: list | None = None,
 ) -> dict:
-    """Write a stage's parquet + lineage manifest; returns the manifest."""
+    """Write a stage's parquet + lineage manifest in one Spark job (the
+    write); returns the manifest. Raises if the rows the write job counted
+    differ from the rows in the written files' footers."""
     path = stage_path(out_dir, stage)
-    writer = df.write.mode("overwrite")
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
-    back = df.sparkSession.read.parquet(path)
-    per_part = (
-        back.groupBy(F.spark_partition_id().alias("partition"))
-        .count()
-        .orderBy("partition")
-        .collect()
-    )
+    rows = int(obs.get["rows"])
+    files = _file_rows(path)
+    in_files = sum(e["rows"] for e in files)
+    if rows != in_files:
+        raise RuntimeError(
+            f"stage {stage!r}: the write counted {rows} rows but the footers "
+            f"of {len(files)} files under {path} hold {in_files}"
+        )
     manifest = {
         "stage": stage,
         "fingerprint": fingerprint,
-        "rows": int(sum(r["count"] for r in per_part)),
-        "partitions": [{"partition": int(r["partition"]), "rows": int(r["count"])} for r in per_part],
+        "rows": rows,
+        "partitions": files,
         "written_at": time.time(),
-        "schema": back.schema.jsonValue(),
+        "schema": _written_schema(df, partition_by),
     }
     with open(_manifest_path(out_dir, stage), "w", encoding="utf-8") as f:
         json.dump(manifest, f)
@@ -88,17 +161,18 @@ def run_stage(
     """Run or resume a stage.
 
     build: () -> DataFrame, invoked only on cache miss.
-    Returns (df, manifest, resumed: bool).
+    Returns (df, manifest, resumed: bool); df reads the stage's files with
+    the manifest schema.
     """
     os.makedirs(out_dir, exist_ok=True)
     fp = _fingerprint(fingerprint_inputs)
     manifest = read_manifest(out_dir, stage)
     path = stage_path(out_dir, stage)
-    if manifest and manifest.get("fingerprint") == fp and os.path.exists(path):
-        return spark.read.parquet(path), manifest, True
-    df = build()
-    manifest = write_stage(df, out_dir, stage, fp, partition_by)
-    return spark.read.parquet(path), manifest, False
+    resumed = bool(manifest and manifest.get("fingerprint") == fp and os.path.exists(path))
+    if not resumed:
+        manifest = write_stage(build(), out_dir, stage, fp, partition_by)
+    df = spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(path)
+    return df, manifest, resumed
 
 
 def append_mentions(
@@ -236,26 +310,31 @@ def build_knowledge_graph(
             "n_surfaces",
         )
 
-    entities, m3, r3 = run_stage(
-        spark,
-        out_dir,
-        "entities",
-        {**base_fp, "stage": "entities", "upstream": m2["fingerprint"]},
-        build_entity_table,
-    )
-    manifests.append(m3)
-    resumed.append(r3)
-
-    triples, m4, r4 = run_stage(
-        spark,
-        out_dir,
-        "triples",
-        {**base_fp, "stage": "triples", "upstream": m2["fingerprint"]},
-        lambda: extract_triples(mention_entities, transcripts),
-        partition_by=["pred"],
-    )
-    manifests.append(m4)
-    resumed.append(r4)
+    # entities and triples both build from mention_entities, not from each
+    # other: run them on two driver threads (each inherits this thread's
+    # job group and local properties) so their jobs share the task slots
+    in_thread = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        ent = pool.submit(
+            in_thread(run_stage),
+            spark,
+            out_dir,
+            "entities",
+            {**base_fp, "stage": "entities", "upstream": m2["fingerprint"]},
+            build_entity_table,
+        )
+        tri = pool.submit(
+            in_thread(run_stage),
+            spark,
+            out_dir,
+            "triples",
+            {**base_fp, "stage": "triples", "upstream": m2["fingerprint"]},
+            lambda: extract_triples(mention_entities, transcripts),
+            partition_by=["pred"],
+        )
+        (entities, m3, r3), (triples, m4, r4) = ent.result(), tri.result()
+    manifests += [m3, m4]
+    resumed += [r3, r4]
 
     return {
         "mentions": mentions,

@@ -122,6 +122,10 @@ def minhash_signatures(df: DataFrame, text_col: str, key_col: str, n_hashes: int
     map-side partial aggregation. Input is spread to full parallelism first
     (a small doc table arrives as one file = one partition; at scale this
     repartition is a no-op relative to natural input splits).
+
+    Keys may repeat: the groupBy merges a key's rows, so its signature is
+    the minhash of the union of their shingle sets. minhash_signatures_kernel
+    matches this only on unique keys.
     """
     from ..ops.text import spread_small_input
 
@@ -140,18 +144,24 @@ def minhash_signatures(df: DataFrame, text_col: str, key_col: str, n_hashes: int
 def minhash_signatures_kernel(
     df: DataFrame, text_col: str, key_col: str, n_hashes: int = 12, k: int = 3
 ) -> DataFrame:
-    """Arrow-kernel evaluation of EXACTLY the minhash_signatures values:
-    per row, distinct character k-shingles -> md5-prefix-28 hash -> n
-    affine permutations -> column minima. Value-identical to the
-    declarative path (hashlib md5 over utf-8 == F.md5; Python character
-    slicing == substring; int64 % == pmod on nonnegative operands) —
+    """Arrow-kernel evaluation of EXACTLY the minhash_signatures values
+    (on unique keys, see below): per row, distinct character k-shingles
+    -> md5-prefix-28 hash -> n affine permutations -> column minima.
+    Value-identical to the declarative path (hashlib md5 over utf-8 ==
+    F.md5; Python character slicing == substring; int64 % == pmod on
+    nonnegative operands) —
     pinned by a parity test — but one per-row stage instead of a 290x
     row explosion through a 48-column hash aggregate: each task memoizes
     shingle hashes (corpus shingle vocabularies are Zipfian, so most md5
     calls become dict hits) and runs the affine family as one (n_hashes x
     n_shingles) numpy matrix op. Measured 2.9s -> 0.4s for the 48-hash
     pass over 50k ~300-char docs at 32 cores. The declarative
-    minhash_signatures remains the oracle-facing reference."""
+    minhash_signatures remains the oracle-facing reference.
+
+    Precondition: key_col is unique. The kernel emits one row per input
+    row and never groups, so a key on several rows with different texts
+    gets one signature row per text, where minhash_signatures merges them
+    into one row; the values are identical only on unique keys."""
     import numpy as np
     import pandas as pd
 

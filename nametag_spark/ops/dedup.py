@@ -55,7 +55,9 @@ def minhash_dup_pairs(
     12-hash and 48-hash passes separately, shingling and md5-ing the
     corpus twice). The pass is the Arrow signature kernel
     (minhash_signatures_kernel — value-identical to the declarative
-    explode->groupBy reference, parity-pinned); banding, the cap/split
+    explode->groupBy reference on unique ids, parity-pinned; a doc id on
+    several rows with different texts gets one signature per row, where
+    the reference merges them); banding, the cap/split
     policy, and the estimate prefilter then run partition-locally in the
     bucket kernel after one hash exchange (_kernel_banded_pairs). The
     exact-Jaccard verify computes shingle ARRAYS only for docs that
@@ -165,19 +167,19 @@ def with_simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     runs once per distinct token).
 
     Docs with no tokens get simhash 0 (all balances 0 -> no bits set);
-    NULL text also maps to 0."""
+    NULL text also maps to 0. An existing simhash column is replaced, so
+    the op reruns on its own output."""
     import re
 
     import numpy as np
     import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    df = spread_small_input(df)
+    df = spread_small_input(df.drop("simhash"))
     split_re = re.compile("[ \t\n\x0b\x0c\r]+")  # Java \s (ASCII), not Python \s
     shifts = np.arange(bits, dtype=np.int64)
     weights = (np.int64(1) << shifts)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", simhash bigint"
+    schema = StructType(df.schema.fields + [StructField("simhash", LongType())])
 
     def kernel(batches):
         import hashlib

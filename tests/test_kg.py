@@ -413,6 +413,119 @@ def test_build_knowledge_graph_resume(spark, tiny_model_dir, tmp_path):
     assert res3["resumed"][0] is False or res3["resumed"][1] is False
 
 
+def _stage_frame(spark):
+    """A small stage frame: non-nullable and nested columns, 3 predicates,
+    3 Spark partitions."""
+    return spark.range(30, numPartitions=3).select(
+        F.col("id"),
+        F.concat(F.lit("p"), (F.col("id") % 3).cast("string")).alias("pred"),
+        F.array(F.struct(F.col("id").alias("x"), F.lit("e").alias("y"))).alias("evidence"),
+    )
+
+
+def test_write_stage_commits_in_one_job(spark, tmp_path):
+    """A stage commits in its write job alone: no read-back job for the
+    row counts or the schema."""
+    import time
+    import uuid
+
+    from nametag_spark.kg.graph_io import write_stage
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.createDataFrame([(i, f"s{i}") for i in range(20)], ["id", "s"])
+    group, marker = (f"{name}-{uuid.uuid4().hex}" for name in ("write-stage", "marker"))
+    try:
+        sc.setJobGroup(group, "write_stage")
+        m = write_stage(df, str(tmp_path), "stage", "fp")
+        # the status tracker is fed by the listener bus, in order: once a
+        # later job shows up, every job write_stage started has too
+        sc.setJobGroup(marker, "marker")
+        spark.range(1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(marker)
+    assert m["rows"] == 20
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+
+
+@pytest.mark.parametrize("partition_by", [None, ["pred"]])
+def test_manifest_rows_match_written_files(spark, tmp_path, partition_by):
+    from nametag_spark.kg.graph_io import write_stage
+
+    m = write_stage(_stage_frame(spark), str(tmp_path), "t", "fp", partition_by)
+    assert m["rows"] == spark.read.parquet(str(tmp_path / "t")).count() == 30
+    assert sum(p["rows"] for p in m["partitions"]) == 30
+    # one entry per output file
+    files = sorted(
+        str(f.relative_to(tmp_path / "t")) for f in (tmp_path / "t").rglob("*.parquet")
+    )
+    assert [p["file"] for p in m["partitions"]] == files
+    if partition_by:
+        assert {f.split("/")[0] for f in files} == {"pred=p0", "pred=p1", "pred=p2"}
+
+
+def test_write_stage_raises_on_row_mismatch(spark, tmp_path, monkeypatch):
+    """A write whose observed count disagrees with the file footers raises
+    and writes no manifest."""
+    from nametag_spark.kg import graph_io
+
+    monkeypatch.setattr(graph_io, "_file_rows", lambda path: [{"file": "x", "rows": 1}])
+    with pytest.raises(RuntimeError, match="footers"):
+        graph_io.write_stage(_stage_frame(spark), str(tmp_path), "t", "fp")
+    assert graph_io.read_manifest(str(tmp_path), "t") is None
+
+
+@pytest.mark.parametrize("partition_by", [None, ["pred"]])
+def test_resumed_stage_schema_matches_inferred(spark, tmp_path, partition_by):
+    """The manifest schema a stage is read back with equals the schema a
+    plain parquet read infers: every field nullable, partition columns
+    last."""
+    from nametag_spark.kg.graph_io import run_stage
+
+    df = _stage_frame(spark)
+    out = str(tmp_path)
+    fresh, _, r1 = run_stage(spark, out, "t", {"k": 1}, lambda: df, partition_by)
+    back, _, r2 = run_stage(
+        spark, out, "t", {"k": 1}, lambda: pytest.fail("resume rebuilt"), partition_by
+    )
+    assert (r1, r2) == (False, True)
+    inferred = spark.read.parquet(f"{out}/t")
+    assert back.schema == fresh.schema == inferred.schema
+    assert sorted(back.collect()) == sorted(inferred.collect())
+
+
+def test_old_format_manifest_resumes(spark, tmp_path):
+    """Manifests whose partitions hold per-spark_partition_id counts (and
+    whose schema was inferred from a read-back) still resume."""
+    import json
+
+    from nametag_spark.kg.graph_io import _fingerprint, run_stage
+
+    inputs = {"stage": "old"}
+    path = str(tmp_path / "old")
+    _stage_frame(spark).write.partitionBy("pred").parquet(path)
+    written = spark.read.parquet(path)
+    manifest = {
+        "stage": "old",
+        "fingerprint": _fingerprint(inputs),
+        "rows": 30,
+        "partitions": [{"partition": 0, "rows": 10}, {"partition": 1, "rows": 20}],
+        "written_at": 0.0,
+        "schema": written.schema.jsonValue(),
+    }
+    (tmp_path / "old._lineage.json").write_text(json.dumps(manifest))
+    got, m, resumed = run_stage(
+        spark, str(tmp_path), "old", inputs, lambda: pytest.fail("resume rebuilt"), ["pred"]
+    )
+    assert resumed and m == manifest
+    assert got.schema == written.schema
+    assert sorted(got.collect()) == sorted(written.collect())
+
+
 def test_partition_pruning_on_pred(spark, tmp_path):
     """The triples table is written partitionBy('pred'); a pred-equality
     filter must prune at the source (PartitionFilters in the scan, not a

@@ -318,6 +318,25 @@ def test_simhash_matches_explode_reference(spark):
         assert a == b
 
 
+def test_simhash_reruns_on_its_own_output(spark):
+    """A second with_simhash over its own output replaces the simhash
+    column instead of failing on a duplicate output field; field names
+    that need quoting in a DDL string and non-nullable fields pass through."""
+    from nametag_spark.ops.dedup import with_simhash
+
+    df = spark.range(1, 5).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("alpha beta "), F.col("id").cast("string")).alias("text"),
+        F.lit("x").alias("odd name-1"),
+    )
+    once = with_simhash(df)
+    twice = with_simhash(once)
+    assert twice.columns == ["doc_id", "text", "odd name-1", "simhash"]
+    assert twice.schema == once.schema
+    assert sorted(map(tuple, twice.collect())) == sorted(map(tuple, once.collect()))
+    assert len({r["simhash"] for r in once.collect()}) > 1
+
+
 def test_cosine_topk_bit_exact_vs_jvm_fold(spark, embeddings):
     """cosine_topk now scores in an Arrow/numpy kernel; its accumulation
     order must reproduce the JVM aggregate/zip_with left fold BIT-exactly
