@@ -20,6 +20,11 @@ Manifest fields:
                files); the stage is read back with it
   written_at   unix time of the commit
 
+A stage's old manifest is deleted before its parquet is overwritten, and
+the new one is written to a temp file and moved into place with
+os.replace, so a build that fails mid-stage leaves either no manifest or
+one that describes the files on disk.
+
 A stage commits in its write job alone: the row counts come from the
 Observation and the footers (read on the driver through pyarrow, no Spark
 job), and every later read uses the manifest schema, so no
@@ -32,6 +37,7 @@ whose `partitions` hold per-`spark_partition_id` counts still resume.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -62,6 +68,15 @@ def read_manifest(out_dir: str, stage: str):
         with open(p, encoding="utf-8") as f:
             return json.load(f)
     return None
+
+
+def _write_json(path: str, obj) -> None:
+    """Replace path with obj as JSON through a temp file and os.replace,
+    so a reader finds the old file or the new one, never a partial one."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 def _nullable(t):
@@ -123,6 +138,11 @@ def write_stage(
     write); returns the manifest. Raises if the rows the write job counted
     differ from the rows in the written files' footers."""
     path = stage_path(out_dir, stage)
+    # the overwrite below invalidates the old manifest; remove it first so
+    # that a failure before the new one is written leaves no manifest, not
+    # one whose fingerprint vouches for files that are no longer there
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(_manifest_path(out_dir, stage))
     obs = Observation()
     writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
     if partition_by:
@@ -145,8 +165,7 @@ def write_stage(
         "written_at": time.time(),
         "schema": _written_schema(df, partition_by),
     }
-    with open(_manifest_path(out_dir, stage), "w", encoding="utf-8") as f:
-        json.dump(manifest, f)
+    _write_json(_manifest_path(out_dir, stage), manifest)
     return manifest
 
 
@@ -213,8 +232,7 @@ def append_mentions(
     mentions.write.mode("append").partitionBy("ingest_batch").parquet(path)
     rows = spark.read.parquet(path).where(F.col("ingest_batch") == batch_id).count()
     batches[batch_id] = {"rows": int(rows), "written_at": time.time()}
-    with open(manifest_path, "w", encoding="utf-8") as f:
-        json.dump(batches, f)
+    _write_json(manifest_path, batches)
     # existence of new mentions invalidates the downstream fingerprint chain
     return {"batch_id": batch_id, "rows": int(rows), "appended": True}
 
@@ -251,7 +269,7 @@ def build_knowledge_graph(
     "resumed": [...]}.
     """
     from ..ner.pipeline import recognize_df
-    from .resolution import resolve_entities
+    from .resolution import entity_table, resolve_entities
     from .triples import extract_triples
 
     config = dict(config or {})
@@ -275,39 +293,21 @@ def build_knowledge_graph(
     manifests.append(m1)
     resumed.append(r1)
 
-    def build_entities():
-        me, ents = resolve_entities(mentions, **config.get("resolution", {}))
-        ents_path_df = me  # mention->entity assignment is stage output
-        return ents_path_df
-
     mention_entities, m2, r2 = run_stage(
         spark,
         out_dir,
         "mention_entities",
         {**base_fp, "stage": "mention_entities", "upstream": m1["fingerprint"]},
-        build_entities,
+        lambda: resolve_entities(mentions, **config.get("resolution", {}))[0],
     )
     manifests.append(m2)
     resumed.append(r2)
 
     def build_entity_table():
-        surf = mention_entities.groupBy("entity_id", "type", "norm").agg(
-            F.count(F.lit(1)).alias("n_mentions")
-        )
-        # single min_by agg (no window): highest n_mentions, ties lexical asc
-        return surf.groupBy("entity_id").agg(
-            F.min_by(
-                F.struct(F.col("norm"), F.col("type")),
-                F.struct((-F.col("n_mentions")).alias("_negn"), F.col("norm").alias("_n")),
-            ).alias("_c"),
-            F.sum("n_mentions").alias("n_mentions"),
-            F.count(F.lit(1)).alias("n_surfaces"),
-        ).select(
-            "entity_id",
-            F.col("_c.norm").alias("canonical"),
-            F.col("_c.type").alias("type"),
-            "n_mentions",
-            "n_surfaces",
+        return entity_table(
+            mention_entities.groupBy("entity_id", "type", "norm").agg(
+                F.count(F.lit(1)).alias("n_mentions")
+            )
         )
 
     # entities and triples both build from mention_entities, not from each

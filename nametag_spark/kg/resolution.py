@@ -2,20 +2,28 @@
 components (SURVEY.md §7.7 / north rule).
 
 No reference analogue — this is the KG extension layered on the mention
-table. Everything here is declarative DataFrame work so Catalyst handles
-pushdown/pruning; the only iteration (connected components) uses the
-alternating large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14 — public), with
-localCheckpoint() to truncate lineage between rounds.
+table. resolve_entities groups mentions into distinct (type, norm)
+surfaces, assign_entities links similar surfaces of one type and labels
+each connected group with one entity id, and entity_table picks each
+entity's canonical name. The entities stage of build_knowledge_graph and
+the streaming compaction call the same two functions, so every path
+assigns and names entities identically.
 
-Scale notes (100 TB posture):
-  - blocking is explode -> groupBy(band) -> within-bucket self-join; bucket
-    width is bounded by LSH parameters, and oversized buckets (degenerate
-    surfaces) are capped explicitly to keep the self-join quadratic blowup
-    bounded (no silent cap: the cap is a parameter and capped buckets can
-    be counted by the caller).
-  - minhash uses md5-derived 64-bit integer hashes (same function exists in
-    DuckDB, which makes the op oracle-checkable).
+Hot path: the per-surface minhash signatures are a declarative array
+transform; banding, the oversized-bucket split and cap, and the
+exact-Jaccard verify run partition-locally in a numpy/Arrow kernel
+(_make_bucket_pair_kernel); connected components finish on the driver in
+a vectorized union-find (_numpy_components) whenever the graph fits. The
+alternating large-star/small-star rounds (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14) are the fallback for graphs
+that do not.
+
+Hashes: minhash takes one 28-bit md5-prefix hash per character shingle
+(_hash28) and derives n permutations from it with an affine family over
+Z_P, P = 2^31 - 1; surface ids are 60-bit md5-prefix integers (_hash64).
+Both are reproducible in DuckDB SQL. The staged declarative formulations
+(minhash_signatures, lsh_candidate_pairs, jaccard_filter) remain as the
+references the kernels are tested against.
 """
 
 from __future__ import annotations
@@ -34,16 +42,22 @@ import weakref
 _PERSISTED: list = []  # list[weakref.ref[DataFrame]]
 
 # Observability: connected_components records which execution tier the last
-# call took (driver-dict / driver-numpy / driver-streaming /
-# contraction->driver-numpy / distributed-star), the edge count, and the
-# memory-derived caps, so scale smokes and the bench artifact can show the
-# tier actually exercised without re-deriving it from thresholds.
+# call took (driver-numpy / driver-streaming / contraction->driver-numpy /
+# distributed-star), the edge count, and the memory-derived caps, so scale
+# smokes and the bench artifact can show the tier actually exercised
+# without re-deriving it from thresholds.
 LAST_CC_INFO: dict = {}
 
 # edges per driver-side Arrow batch in the streaming CC tier (~64 MB of
 # int64 pairs); module-level so tests can force multi-batch ingestion on
 # small graphs
 _STREAM_BATCH_EDGES = 4_000_000
+
+# row caps for the broadcast hints on driver-built tables: the component
+# table connected_components returns, and the surface assignment
+# resolve_entities joins onto the mention table
+_BROADCAST_NODE_CAP = 8_000_000
+_BROADCAST_SURFACE_CAP = 2_000_000
 
 
 def _register_persisted(df: DataFrame) -> None:
@@ -254,11 +268,10 @@ def _banded_bucket_frames(
     stage is CPU-dense relative to its byte size and a planner-inserted
     exchange gets coalesced by AQE on bytes alone (measured 4 tasks /
     0.98s straggler on a stage with 2.6s of intersect CPU at sf0.1); the
-    explicit count (default spark.sparkContext.defaultParallelism, conf
-    `spark.nametag.lsh.bucketPartitions`) scales with the cluster. The
-    oversized-bucket sets are keys-only aggregates computed FROM that
-    same exchange (co-partitioned groupBy: no second exchange, payload
-    columns pruned) and joined back as broadcast anti/semi probes, so the
+    explicit count (spark.sparkContext.defaultParallelism) scales with the
+    cluster. The oversized-bucket sets are keys-only aggregates computed
+    FROM that same exchange (co-partitioned groupBy: no second exchange,
+    payload columns pruned) and joined back as broadcast anti/semi probes, so the
     heavy shingle-payload rows are shuffled once and never re-sorted for
     size accounting (a window-count variant measured 20-30% SLOWER at
     240k surfaces — it re-sorts the payload per branch). Both branch
@@ -294,10 +307,7 @@ def _banded_bucket_frames(
     buckets = sig.select(
         *carry, sub1.alias("_s1"), sub2.alias("_s2"), F.explode(F.array(*band_cols)).alias("bk")
     ).select(*carry, "_s1", "_s2", F.col("bk.band").alias("band"), F.col("bk.sig").alias("sig"))
-    spark = sig.sparkSession
-    n_part = int(spark.conf.get("spark.nametag.lsh.bucketPartitions", "0") or 0)
-    if n_part <= 0:
-        n_part = spark.sparkContext.defaultParallelism
+    n_part = sig.sparkSession.sparkContext.defaultParallelism
     bucket_key = list(block_cols) + ["band", "sig"]
     # persist the repartitioned bucket rows: the exchange alone is not
     # enough — every consumer stage (size aggregate, anti/semi probes,
@@ -453,10 +463,9 @@ def _make_bucket_pair_kernel(
                         banding already is the policy).
 
     Memory: the kernel holds one partition's bucket rows; partition count
-    comes from the caller's repartition (conf
-    spark.nametag.lsh.bucketPartitions), so at scale partitions stay
-    surface-sized. Emitted pairs are (lo, hi) per bucket occurrence —
-    exactly the l._k < r._k self-join rows."""
+    comes from the caller's repartition (defaultParallelism), so at scale
+    partitions stay surface-sized. Emitted pairs are (lo, hi) per bucket
+    occurrence — exactly the l._k < r._k self-join rows."""
     half = n_hashes // 2
 
     def kernel(batches):
@@ -631,10 +640,7 @@ def _kernel_banded_pairs(
         *carry_mh,
         F.explode(F.array(*band_cols)).alias("bk"),
     ).select(*keep, *mh_names, F.col("bk.band").alias("band"), F.col("bk.sig").alias("sig"))
-    spark = sig.sparkSession
-    n_part = int(spark.conf.get("spark.nametag.lsh.bucketPartitions", "0") or 0)
-    if n_part <= 0:
-        n_part = spark.sparkContext.defaultParallelism
+    n_part = sig.sparkSession.sparkContext.defaultParallelism
     bucket_key = (["_blk"] if block else []) + ["band", "sig"]
     buckets = buckets.repartition(n_part, *bucket_key)
     kt = sig.schema["_k"].dataType.simpleString()
@@ -973,7 +979,6 @@ def _driver_node_cap(spark) -> int:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 20,
-    driver_threshold: int = 200_000,
     contracted_driver_threshold: int | None = None,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components.
@@ -983,24 +988,24 @@ def connected_components(
     (component, component) self-row). Isolated nodes that never appear in
     edges must be handled by the caller (left join + coalesce to self).
 
-    Hybrid execution, four tiers: similarity graphs are usually tiny
+    Hybrid execution, three tiers: similarity graphs are usually tiny
     relative to the mention table (edges live on distinct-surface pairs),
     so when the edge count fits comfortably on the driver we run union-find
     locally instead of paying ~8 shuffle rounds per star iteration.
-      1. driver-dict: <= driver_threshold edges, plain dict union-find.
-      2. driver-numpy: up to contracted_driver_threshold edges (default
+      1. driver-numpy: up to contracted_driver_threshold edges (default
          derived from spark.driver.memory — _driver_edge_cap — so the
          collect tier never outgrows the actual driver), the raw pair
          list Arrow-collects and the VECTORIZED min-label union-find
          (_numpy_components, hook-and-compress) finishes in O(log n)
          numpy rounds — 12M edges in ~2s.
-      3. driver-streaming: edges exceed the collect cap but the NODE set
+      2. driver-streaming: edges exceed the collect cap but the NODE set
          fits (_driver_node_cap): edges spill to parquet once and stream
          through a fixed driver label array in bounded batches — driver
          memory O(nodes + batch), not O(edges).
-      4. distributed: endpoint-keyed contraction passes try to shrink the
-         graph under the collect threshold, falling back to the
-         fully-distributed alternating-star algorithm when they can't.
+      3. distributed: endpoint-keyed contraction passes try to shrink the
+         graph under the collect threshold and finish it like tier 1
+         (contraction->driver-numpy), falling back to the fully-distributed
+         alternating-star algorithm (distributed-star) when they can't.
     The final (node -> min component id) mapping is independent of
     partitioning and of the tier taken."""
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).where(F.col("src") != F.col("dst"))
@@ -1022,19 +1027,16 @@ def connected_components(
         BroadcastHashJoin instead of shuffling both sides (a driver-local
         list/pandas frame plans as an RDD scan with UNKNOWN stats, so the
         auto-broadcast threshold never fires on its own). Values are
-        unchanged — it is a planner hint. Cap keeps huge component tables
-        off the executors' memory (conf `spark.nametag.cc.broadcastNodeCap`,
-        rows)."""
-        cap = int(spark.conf.get("spark.nametag.cc.broadcastNodeCap", "8000000"))
-        return F.broadcast(df) if n_rows <= cap else df
+        unchanged — it is a planner hint. The cap keeps huge component
+        tables off the executors' memory."""
+        return F.broadcast(df) if n_rows <= _BROADCAST_NODE_CAP else df
 
     def _driver_finish(edge_df, cached, tier_label):
         """Arrow-collect the (src, dst) pairs and run the vectorized
         min-label union-find — ~16 bytes/edge on the driver, O(log n)
         numpy rounds (2s for 12M edges vs ~30s for the dict walk). The
-        result is the same (component = min node id) for every tier, so
-        the <=driver_threshold band routes through here too (the label
-        keeps naming the ROUTING band, not the kernel)."""
+        driver-numpy tier finishes here on the raw edges and the
+        contraction tier on the contracted ones; tier_label names which."""
         import pandas as pd
 
         LAST_CC_INFO["tier"] = tier_label
@@ -1047,9 +1049,6 @@ def connected_components(
             spark.createDataFrame(pd.DataFrame({"node": nodes, "component": labels})),
             len(nodes),
         )
-
-    if n_edges <= driver_threshold:
-        return _driver_finish(e, e0, "driver-dict")
 
     if n_edges <= contracted_driver_threshold:
         # the raw edge list already fits the driver: no contraction pass
@@ -1229,47 +1228,30 @@ def connected_components(
     ).distinct()
 
 
-def resolve_entities(
-    mentions: DataFrame,
+def assign_entities(
+    surfaces: DataFrame,
     lsh_hashes: int = 12,
     lsh_bands: int = 4,
     shingle_k: int = 3,
     jaccard_threshold: float = 0.6,
     max_bucket: int = 200,
-) -> tuple[DataFrame, DataFrame]:
-    """Mentions -> (mention_entities, entities).
+) -> DataFrame:
+    """Distinct (type, norm, n_mentions) surfaces -> (type, norm,
+    n_mentions, entity_id).
 
-    Blocking + similarity edges are built over distinct (type, norm) surface
-    pairs (dramatically smaller than the mention table at scale: entity
-    surfaces follow a Zipf law), then components are joined back.
-
-    Returns:
-      mention_entities: mentions + (norm, entity_id)
-      entities: (entity_id, type, canonical, n_mentions, n_surfaces)
-    """
-    # cut the (expensive) upstream NER lineage once: every branch below —
-    # surface aggregation, LSH, similarity join, final assignment join —
-    # would otherwise recompute the mention table. Registered for
-    # release_persisted() so long-lived sessions can reclaim the blocks.
-    m = canonicalize_mentions(mentions).where(F.length("norm") > 0).persist()
-    _register_persisted(m)
-
-    surfaces = (
-        m.groupBy("type", "norm").agg(F.count(F.lit(1)).alias("n_mentions"))
-    ).persist()
-    _register_persisted(surfaces)
-    # stable surface key: deterministic hash of (type, norm)
-    surfaces = surfaces.withColumn("sid", _hash64(F.concat_ws("\t", "type", "norm"), 0))
-
-    # candidate pairs within the same entity type only: the type is a hard
-    # BLOCKING column on the bucket key (not a prefix baked into the
-    # shingled text, which poisons band minima at scale — see
-    # lsh_similarity_edges); Jaccard verifies over the norm alone
-    # dedupe=False: connected_components normalizes + distincts its input
-    # anyway, so the edge list's own distinct would be a second full
+    Surfaces of one type whose norms pass the shingle-Jaccard verify are
+    linked, and every connected group shares one entity id: the minimum
+    surface id in it. A surface with no link is its own entity, with its
+    own surface id, a hash of (type, norm). The type is a hard BLOCKING
+    column on the LSH bucket key, not a prefix baked into the shingled
+    text, which poisons band minima at scale (see lsh_similarity_edges);
+    the Jaccard verify runs over the norm alone."""
+    s = surfaces.withColumn("sid", _hash64(F.concat_ws("\t", "type", "norm"), 0))
+    # dedupe=False: connected_components normalizes and distincts its
+    # input anyway, so the edge list's own distinct would be a second full
     # exchange + aggregate over the same pairs for identical components
     edges = lsh_similarity_edges(
-        surfaces.select("sid", "type", "norm"),
+        s.select("sid", "type", "norm"),
         "norm",
         "sid",
         n_hashes=lsh_hashes,
@@ -1280,33 +1262,23 @@ def resolve_entities(
         block_col="type",
         dedupe=False,
     )
-
     comp = connected_components(edges)
-    assign = surfaces.join(comp, surfaces["sid"] == comp["node"], "left").select(
-        surfaces["type"],
-        surfaces["norm"],
-        surfaces["n_mentions"],
-        surfaces["sid"],
-        F.coalesce(comp["component"], surfaces["sid"]).alias("entity_id"),
+    return s.join(comp, s["sid"] == comp["node"], "left").select(
+        s["type"],
+        s["norm"],
+        s["n_mentions"],
+        F.coalesce(comp["component"], s["sid"]).alias("entity_id"),
     )
-    # connected_components already ran its jobs, so the persisted surface
-    # table is materialized and this count is a cache read. Under the cap,
-    # hint the (vocabulary-sized) assignment broadcastable: the
-    # mention_entities join then leaves the (corpus-sized) mention table
-    # unshuffled — the join posture that holds at 100 TB, where mentions
-    # outgrow surfaces by orders of magnitude. Above the cap both sides
-    # shuffle as before (conf `spark.nametag.resolve.broadcastSurfaceCap`).
-    bcast_cap = int(
-        mentions.sparkSession.conf.get("spark.nametag.resolve.broadcastSurfaceCap", "2000000")
-    )
-    assign_small = assign.select("type", "norm", "entity_id")
-    if surfaces.count() <= bcast_cap:
-        assign_small = F.broadcast(assign_small)
 
-    # canonical surface = most frequent norm in the component (ties: lexical
-    # ascending). One min_by aggregation — no window pass: min over the
-    # struct (-n_mentions, norm) picks highest frequency then lowest norm.
-    entities = assign.groupBy("entity_id").agg(
+
+def entity_table(assignment: DataFrame) -> DataFrame:
+    """(entity_id, type, norm, n_mentions) surface rows -> entities
+    (entity_id, canonical, type, n_mentions, n_surfaces).
+
+    The canonical name is the entity's most frequent norm, ties broken by
+    the lexically smaller norm: one min_by over the struct
+    (-n_mentions, norm), no window pass."""
+    return assignment.groupBy("entity_id").agg(
         F.min_by(
             F.struct(F.col("norm"), F.col("type")),
             F.struct((-F.col("n_mentions")).alias("_negn"), F.col("norm").alias("_n")),
@@ -1321,5 +1293,43 @@ def resolve_entities(
         "n_surfaces",
     )
 
+
+def resolve_entities(mentions: DataFrame, **resolution) -> tuple[DataFrame, DataFrame]:
+    """Mentions -> (mention_entities, entities).
+
+    Blocking + similarity edges are built over distinct (type, norm) surface
+    pairs (dramatically smaller than the mention table at scale: entity
+    surfaces follow a Zipf law), then components are joined back.
+    resolution: keyword arguments of assign_entities (LSH and verify
+    parameters).
+
+    Returns:
+      mention_entities: mentions + (norm, entity_id)
+      entities: (entity_id, canonical, type, n_mentions, n_surfaces)
+    """
+    # cut the (expensive) upstream NER lineage once: every branch below —
+    # surface aggregation, LSH, similarity join, final assignment join —
+    # would otherwise recompute the mention table. Registered for
+    # release_persisted() so long-lived sessions can reclaim the blocks.
+    m = canonicalize_mentions(mentions).where(F.length("norm") > 0).persist()
+    _register_persisted(m)
+
+    surfaces = (
+        m.groupBy("type", "norm").agg(F.count(F.lit(1)).alias("n_mentions"))
+    ).persist()
+    _register_persisted(surfaces)
+    assign = assign_entities(surfaces, **resolution)
+
+    # connected_components already ran its jobs, so the persisted surface
+    # table is materialized and this count is a cache read. Under the cap,
+    # hint the (vocabulary-sized) assignment broadcastable: the
+    # mention_entities join then leaves the (corpus-sized) mention table
+    # unshuffled — the join posture that holds at 100 TB, where mentions
+    # outgrow surfaces by orders of magnitude. Above the cap both sides
+    # shuffle.
+    assign_small = assign.select("type", "norm", "entity_id")
+    if surfaces.count() <= _BROADCAST_SURFACE_CAP:
+        assign_small = F.broadcast(assign_small)
+
     mention_entities = m.join(assign_small, ["type", "norm"], "left")
-    return mention_entities, entities
+    return mention_entities, entity_table(assign)

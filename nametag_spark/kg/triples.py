@@ -61,11 +61,7 @@ def triple_evidence(
     # (AQE coalesces planner exchanges by byte size alone); sentence
     # windowing moves into the pair filter so the partitioning ALSO
     # satisfies the transcript-context join below at any scale.
-    spark = mention_entities.sparkSession
-    n_part = int(spark.conf.get("spark.nametag.triples.pairPartitions", "0") or 0)
-    if n_part <= 0:
-        n_part = spark.sparkContext.defaultParallelism
-    m = m.repartition(n_part, "conv_id", "turn_idx")
+    m = m.repartition(m.sparkSession.sparkContext.defaultParallelism, "conv_id", "turn_idx")
 
     rules = m.sparkSession.createDataFrame(
         PREDICATE_RULES, ["subj_type", "obj_type", "pred"]

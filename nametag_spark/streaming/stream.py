@@ -143,19 +143,17 @@ def compact_triples(
     spark: SparkSession,
     out_dir: str,
     evidence_cap: int | None = 1000,
-    lsh_hashes: int = 12,
-    lsh_bands: int = 4,
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.6,
-    max_bucket: int = 200,
+    **resolution,
 ):
     """Compaction over the accumulated evidence log: resolve entities across
-    ALL surfaces seen so far (LSH blocking + connected components on the
-    distinct (type, norm) table — small relative to the evidence), assign
-    ids to both pair sides, and run the fused triple aggregation. Returns
-    the triples DataFrame; callers persist it with graph_io.write_stage for
-    lineage + pred partitioning."""
-    from ..kg.resolution import _hash64, connected_components, lsh_similarity_edges
+    ALL surfaces seen so far with the batch pipeline's assign_entities (on
+    the distinct (type, norm) table — small relative to the evidence),
+    assign ids to both pair sides, and run the fused triple aggregation.
+    resolution: keyword arguments of assign_entities; the same values give
+    the same clustering as resolve_entities. Returns the triples
+    DataFrame; callers persist it with graph_io.write_stage for lineage +
+    pred partitioning."""
+    from ..kg.resolution import assign_entities
     from ..kg.triples import aggregate_triples
 
     ev = spark.read.parquet(f"{out_dir}/evidence")
@@ -164,30 +162,9 @@ def compact_triples(
         spark.read.parquet(f"{out_dir}/surfaces")
         .groupBy("type", "norm")
         .agg(F.sum("n_mentions").alias("n_mentions"))
-        .withColumn("sid", _hash64(F.concat_ws("\t", "type", "norm"), 0))
         .persist()
     )
-    # same blocking/verify parameters as resolve_entities' defaults, so the
-    # compacted clustering equals the batch pipeline's (type as a hard
-    # blocking column, Jaccard over the norm alone)
-    comp = connected_components(
-        lsh_similarity_edges(
-            surfaces.select("sid", "type", "norm"),
-            "norm",
-            "sid",
-            n_hashes=lsh_hashes,
-            bands=lsh_bands,
-            k=shingle_k,
-            threshold=jaccard_threshold,
-            max_bucket=max_bucket,
-            block_col="type",
-        )
-    )
-    assign = surfaces.join(comp, surfaces["sid"] == comp["node"], "left").select(
-        surfaces["type"],
-        surfaces["norm"],
-        F.coalesce(comp["component"], surfaces["sid"]).alias("entity_id"),
-    )
+    assign = assign_entities(surfaces, **resolution)
 
     subj_assign = assign.select(
         F.col("type").alias("subj_type"),

@@ -35,9 +35,9 @@ def _uf_components(edges, nodes):
 import pytest as _pytest
 
 
-@_pytest.mark.parametrize("tier", ["dict", "numpy", "streaming", "star"])
+@_pytest.mark.parametrize("tier", ["numpy", "streaming", "star"])
 def test_connected_components_matches_union_find(spark, tier):
-    """All four hybrid tiers must agree exactly with reference union-find
+    """All three hybrid tiers must agree exactly with reference union-find
     (the thresholds only pick the execution strategy, never the result),
     and LAST_CC_INFO must report the tier actually taken."""
     import random
@@ -52,13 +52,11 @@ def test_connected_components_matches_union_find(spark, tier):
     edges = [(a, b) for a, b in edges if a != b]
 
     kw = {
-        "dict": dict(driver_threshold=2_000_000),
-        "numpy": dict(driver_threshold=0, contracted_driver_threshold=8_000_000),
-        "streaming": dict(driver_threshold=0, contracted_driver_threshold=0),
-        "star": dict(driver_threshold=0, contracted_driver_threshold=0),
+        "numpy": dict(contracted_driver_threshold=8_000_000),
+        "streaming": dict(contracted_driver_threshold=0),
+        "star": dict(contracted_driver_threshold=0),
     }[tier]
     expect_tier = {
-        "dict": "driver-dict",
         "numpy": "driver-numpy",
         "streaming": "driver-streaming",
         "star": "distributed-star",
@@ -135,7 +133,7 @@ def test_connected_components_chain_graph(spark, tier):
             spark.conf.set("spark.nametag.cc.driverNodeCap", "0")
         got = {
             r["node"]: r["component"]
-            for r in connected_components(df, driver_threshold=0, **kw).collect()
+            for r in connected_components(df, **kw).collect()
         }
     finally:
         spark.conf.unset("spark.nametag.cc.driverNodeCap")
@@ -171,7 +169,7 @@ def test_cc_driver_tier_is_memory_aware(spark):
         # set still fits, so the streaming tier takes it), same answer
         got = {
             r["node"]: r["component"]
-            for r in connected_components(df, driver_threshold=0).collect()
+            for r in connected_components(df).collect()
         }
         assert LAST_CC_INFO["tier"] == "driver-streaming"
         expect = _uf_components(
@@ -200,9 +198,7 @@ def test_cc_streaming_tier_multi_batch(spark, monkeypatch):
     df = spark.createDataFrame(edges, ["src", "dst"]).repartition(8)
     got = {
         r["node"]: r["component"]
-        for r in R.connected_components(
-            df, driver_threshold=0, contracted_driver_threshold=0
-        ).collect()
+        for r in R.connected_components(df, contracted_driver_threshold=0).collect()
     }
     assert R.LAST_CC_INFO["tier"] == "driver-streaming"
     expect = _uf_components(edges, set([a for a, _ in edges] + [b for _, b in edges]))
@@ -238,7 +234,7 @@ def test_cc_streaming_tier_detects_unshared_spill(spark, monkeypatch):
     edges = [(i, i + 1) for i in range(1, 500)]
     df = spark.createDataFrame(edges, ["src", "dst"]).repartition(4)
     with pytest.raises(RuntimeError, match="spill directory is not shared"):
-        R.connected_components(df, driver_threshold=0, contracted_driver_threshold=0)
+        R.connected_components(df, contracted_driver_threshold=0)
 
 
 def test_minhash_similar_strings_collide(spark):
@@ -292,16 +288,24 @@ def test_lsh_prefilter_intersection_collision_bypass(spark):
     assert {(r["src"], r["dst"]) for r in edges.collect()} == {(1, 2)}
 
 
-def test_resolve_entities_merges_variants(spark):
+def test_resolve_entities_merges_variants(spark, tmp_path, monkeypatch):
+    """Variants of one name merge into one entity, whose canonical name is
+    its most frequent norm; on a tie, the lexically smaller one. The
+    entities stage of build_knowledge_graph makes the same pick."""
+    from nametag_spark.kg.graph_io import build_knowledge_graph
+    from nametag_spark.ner import pipeline
+
     mentions = pd.DataFrame(
         [
-            # same org with two spellings, one person, in several turns
+            # same org with two spellings, twice each, one person
             {"conv_id": "c1", "turn_idx": 0, "sent_idx": 0, "tok_start": 0, "tok_len": 2,
-             "char_start": 0, "char_len": 9, "type": "ORG", "surface": "Acme Corporation"},
+             "char_start": 0, "char_len": 9, "type": "ORG", "surface": "ACME corporations"},
             {"conv_id": "c1", "turn_idx": 1, "sent_idx": 0, "tok_start": 0, "tok_len": 2,
              "char_start": 0, "char_len": 9, "type": "ORG", "surface": "Acme Corporation"},
             {"conv_id": "c2", "turn_idx": 0, "sent_idx": 0, "tok_start": 0, "tok_len": 2,
              "char_start": 0, "char_len": 9, "type": "ORG", "surface": "ACME corporations"},
+            {"conv_id": "c2", "turn_idx": 1, "sent_idx": 0, "tok_start": 0, "tok_len": 2,
+             "char_start": 0, "char_len": 9, "type": "ORG", "surface": "Acme Corporation"},
             {"conv_id": "c2", "turn_idx": 1, "sent_idx": 0, "tok_start": 3, "tok_len": 1,
              "char_start": 9, "char_len": 5, "type": "PER", "surface": "Alice"},
         ]
@@ -311,9 +315,17 @@ def test_resolve_entities_merges_variants(spark):
     ents_pd = ents.toPandas()
     orgs = ents_pd[ents_pd.type == "ORG"]
     assert len(orgs) == 1, f"expected merged ORG entity, got {orgs}"
-    assert orgs.iloc[0]["canonical"] == "acme corporation"  # most frequent norm
-    assert orgs.iloc[0]["n_mentions"] == 3
+    assert orgs.iloc[0]["canonical"] == "acme corporation"  # 2:2 tie, lexically smaller
+    assert orgs.iloc[0]["n_mentions"] == 4 and orgs.iloc[0]["n_surfaces"] == 2
     assert len(ents_pd[ents_pd.type == "PER"]) == 1
+
+    # the entities stage re-derives the table from mention_entities
+    monkeypatch.setattr(pipeline, "recognize_df", lambda transcripts, model_dir: df)
+    staged = build_knowledge_graph(
+        spark, None, "no-model", str(tmp_path / "g"),
+        config={"resolution": {"jaccard_threshold": 0.5}},
+    )["entities"]
+    assert staged.exceptAll(ents).count() == 0 and ents.exceptAll(staged).count() == 0
 
 
 def test_extract_triples_cooccurrence(spark):
@@ -470,13 +482,19 @@ def test_manifest_rows_match_written_files(spark, tmp_path, partition_by):
 
 def test_write_stage_raises_on_row_mismatch(spark, tmp_path, monkeypatch):
     """A write whose observed count disagrees with the file footers raises
-    and writes no manifest."""
+    and leaves no manifest: not even the one of the stage's earlier build,
+    whose files the failed write overwrote."""
     from nametag_spark.kg import graph_io
 
-    monkeypatch.setattr(graph_io, "_file_rows", lambda path: [{"file": "x", "rows": 1}])
-    with pytest.raises(RuntimeError, match="footers"):
-        graph_io.write_stage(_stage_frame(spark), str(tmp_path), "t", "fp")
-    assert graph_io.read_manifest(str(tmp_path), "t") is None
+    out = str(tmp_path)
+    graph_io.run_stage(spark, out, "t", {"fp": "A"}, lambda: spark.range(3))
+    with monkeypatch.context() as mp:
+        mp.setattr(graph_io, "_file_rows", lambda path: [{"file": "x", "rows": 1}])
+        with pytest.raises(RuntimeError, match="footers"):
+            graph_io.run_stage(spark, out, "t", {"fp": "B"}, lambda: spark.range(5))
+    assert graph_io.read_manifest(out, "t") is None
+    df, m, resumed = graph_io.run_stage(spark, out, "t", {"fp": "A"}, lambda: spark.range(3))
+    assert not resumed and m["rows"] == df.count() == 3
 
 
 @pytest.mark.parametrize("partition_by", [None, ["pred"]])
